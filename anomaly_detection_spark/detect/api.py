@@ -5,7 +5,7 @@
 - ``"rules"`` — the window-based flags engine (detect/rules.py; the
   reference's SQL engine). 100% JVM, one shuffle.
 - ``"stl"``   — per-series decomposition + IQR test (detect/stl.py;
-  the reference's R engine), applyInPandas.
+  the reference's R engine), batched per partition.
 - ``"shesd"`` — Seasonal Hybrid ESD (detect/sesd.py; the reference's
   archived Twitter-AnomalyDetection experiment).
 - ``"hampel"`` / ``"cusum"`` / ``"robust_z"`` — the robust-statistics

@@ -7,9 +7,10 @@ Reference flow: distinct ticker list → SERIAL per-ticker
 projection with renames (columns confirmed from the saved workspace,
 SURVEY.md §1.2).
 
-Here the serial loop is one ``applyInPandas`` pass (per-key parallel —
-the reference's own "TODO: optimize time" fixed by construction) and
-the merges are broadcast left joins. Output column order and names
+Here the serial loop is one shuffle plus one ``mapInPandas`` pass that
+scores each partition's series with one batched LOESS call per series
+length (``detect/stl.py``; bit-identical to scoring them one by one),
+and the merges are broadcast left joins. Output column order and names
 match the reference's ``anomaly_df`` exactly:
 
 data_timestamp, index, region, ticker_index, anomaly, value,

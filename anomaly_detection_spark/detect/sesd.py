@@ -14,8 +14,8 @@ incomplete beta via the standard continued-fraction expansion
 (Abramowitz & Stegun 26.5.8 / Lentz's method) and bisection for the
 inverse. Accuracy ~1e-10, plenty for critical-value thresholds.
 
-Spark-side: ``applyInPandas`` per series, same bounded-group contract
-as the STL engine.
+Spark-side: the STL engine's ``map_series`` — one Python call per
+partition, series of one length decomposed in one batched call.
 """
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 
-from anomaly_detection_spark.detect.stl import decompose
+from anomaly_detection_spark.detect.stl import decompose_rows, map_series
 
 
 # --- Student-t quantile, pure python/numpy ---------------------------------
@@ -189,29 +189,22 @@ def shesd_detect(
         "residual double"
     )
 
-    def detect(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        vals = pdf[value_col].to_numpy(dtype=np.float64)
-        n = len(vals)
-        empty = pd.DataFrame(
-            columns=keys + ["data_timestamp", "value", "residual"])
+    def detect(head: dict, ts: np.ndarray, vals: np.ndarray):
+        m, n = vals.shape
         if n < 2 * period:
-            return empty
-        season, _trend, _rem = decompose(vals, period=period)
+            return None
+        season, _trend, _rem = decompose_rows(vals, period=period)
         # S-H-ESD residual: x - seasonal - median(x) (NOT the trend —
         # per the paper, median replaces trend for robustness)
-        resid = vals - season - np.median(vals)
+        resid = vals - season - np.median(vals, axis=1, keepdims=True)
         k = max(1, int(math.floor(max_anoms * n)))
-        idx = gesd_outliers(resid, k, alpha=alpha, direction=direction)
-        if len(idx) == 0:
-            return empty
-        out = pd.DataFrame({kk: pdf[kk].iloc[idx].to_numpy() for kk in keys})
-        out["data_timestamp"] = pdf[ts_col].iloc[idx].to_numpy()
-        out["value"] = vals[idx]
-        out["residual"] = resid[idx]
-        return out
+        hits = [(r, j) for r in range(m) for j in
+                gesd_outliers(resid[r], k, alpha=alpha, direction=direction)]
+        if not hits:
+            return None
+        r, j = np.array(hits).T
+        return pd.DataFrame({**{kk: v[r] for kk, v in head.items()},
+                             "data_timestamp": ts[r, j], "value": vals[r, j],
+                             "residual": resid[r, j]})
 
-    slim = fact.select(*keys, ts_col, value_col).repartition(
-        fact.sparkSession.sparkContext.defaultParallelism, *keys
-    )
-    return slim.groupBy(*keys).applyInPandas(detect, schema=out_schema)
+    return map_series(fact, keys, ts_col, value_col, detect, out_schema)

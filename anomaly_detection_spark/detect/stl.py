@@ -4,19 +4,15 @@ reference's R engine (``func.R:84-157``: tibbletime/anomalize
 
 The reference runs a **serial** per-ticker loop in one R process
 (``func.R:131-133`` — its own "TODO: optimize time" bottleneck). Here
-the same per-series computation runs as ``groupBy(keys).applyInPandas``:
-each series is a bounded pandas frame (trailing-N rows) processed on an
-executor, Arrow-batched, embarrassingly parallel across keys — the
-single biggest scalability win of the port (SURVEY.md §2.9 M7). At
-100 TB key cardinality grows but group size stays bounded, so executor
-memory is flat and the job scales linearly.
-
-Decomposition: ``statsmodels.tsa.seasonal.STL(period, robust=True)``
-when available; otherwise a pure-numpy classical additive
-decomposition (centered moving-average trend + per-phase median
-seasonal) with the same observed/season/trend/remainder contract —
-the container has no statsmodels, and the IQR anomaly test only needs
-a detrended/deseasonalized remainder.
+``map_series`` makes one Python call per partition (``mapInPandas``
+over rows hash-partitioned by key and sorted by key and time): it cuts
+each Arrow batch into series, buckets them by length and decomposes
+each bucket with one call of the batched LOESS kernel
+(``loess_stl.stl_periodic_batch``) — no pandas frame per series.  The
+kernel reduces only along each row's own series axis, so a series
+scores bit-identically whether it is batched alone or with hundreds of
+others (``tests/test_stl_batch.py`` pins the batched path against the
+per-series ``decompose`` + ``iqr_anomalize`` loop).
 
 Anomaly test: the anomalize package's IQR method (its default):
 limits ``q25 − k·IQR`` / ``q75 + k·IQR`` with ``k = 0.15/alpha``
@@ -39,17 +35,14 @@ default normalizes — SURVEY.md §7.3):
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Callable, Iterator, Optional, Sequence
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 
-try:  # statsmodels is not in the v1 container; prefer it when present
-    from statsmodels.tsa.seasonal import STL as _STL  # type: ignore
-except ImportError:  # pragma: no cover
-    _STL = None
+from anomaly_detection_spark.detect.loess_stl import stl_periodic_batch
 
 ALPHA_DEFAULT = 0.05
 MAX_ANOMS_DEFAULT = 0.2
@@ -80,29 +73,32 @@ def _moving_average_trend(values: np.ndarray, period: int) -> np.ndarray:
     return trend
 
 
-def decompose(values: np.ndarray, period: int = 7,
-              robust: bool = True) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """observed → (season, trend, remainder), additive.
+def decompose_rows(values: np.ndarray, period: int = 7, robust: bool = True
+                   ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """observed → (season, trend, remainder), additive, for each row of
+    an m×n array of equal-length series.
 
-    STL when statsmodels is importable and the series is long enough
-    (≥ 2 full periods, the same constraint the reference hits —
-    SURVEY.md §7.6.3); classical numpy decomposition otherwise.
+    The vendored LOESS STL, batched over all rows, when the series is
+    long enough (≥ 2 full periods, the same constraint the reference
+    hits — SURVEY.md §7.6.3; fidelity pinned by
+    tests/test_stl_fidelity.py); a trend-only moving average otherwise.
     """
     values = np.asarray(values, dtype=np.float64)
-    n = len(values)
+    n = values.shape[1]
     if n < 2 * period:
         # too short for seasonal estimation — trend-only fallback
-        trend = _moving_average_trend(values, min(period, max(1, n // 2)))
-        season = np.zeros(n)
-        return season, trend, values - trend
-    if _STL is not None:
-        res = _STL(values, period=period, robust=robust).fit()
-        return np.asarray(res.seasonal), np.asarray(res.trend), np.asarray(res.resid)
-    # vendored pure-numpy LOESS STL (periodic seasonal, robust outer
-    # loop) — the faithful stand-in for R's stl(s.window="periodic",
-    # robust=TRUE); fidelity pinned by tests/test_stl_fidelity.py
-    from anomaly_detection_spark.detect.loess_stl import stl_periodic
-    return stl_periodic(values, period=period, robust=robust)
+        width = min(period, max(1, n // 2))
+        trend = np.stack([_moving_average_trend(v, width) for v in values])
+        return np.zeros_like(values), trend, values - trend
+    return stl_periodic_batch(values, period=period, robust=robust)
+
+
+def decompose(values: np.ndarray, period: int = 7,
+              robust: bool = True) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """``decompose_rows`` of one series."""
+    parts = decompose_rows(np.asarray(values, dtype=np.float64)[None],
+                           period=period, robust=robust)
+    return tuple(p[0] for p in parts)
 
 
 def iqr_anomalize(remainder: np.ndarray, alpha: float = ALPHA_DEFAULT,
@@ -133,6 +129,112 @@ def _score(remainder: np.ndarray, l1: float, l2: float) -> np.ndarray:
     return np.abs(remainder - buffer_zero) / buffer_radius
 
 
+def iqr_score_rows(remainder: np.ndarray, alpha: float = ALPHA_DEFAULT,
+                   max_anoms: float = MAX_ANOMS_DEFAULT
+                   ) -> tuple[np.ndarray, np.ndarray]:
+    """``iqr_anomalize`` + ``_score`` on each row of an m×n remainder
+    → (anomaly flags, scores), both m×n."""
+    flags = np.empty(remainder.shape, dtype=bool)
+    scores = np.empty(remainder.shape)
+    for r, row in enumerate(remainder):
+        flags[r], l1, l2 = iqr_anomalize(row, alpha=alpha, max_anoms=max_anoms)
+        scores[r] = _score(row, l1, l2)
+    return flags, scores
+
+
+def summarize_rows(ts: np.ndarray, vals: np.ndarray, period: int = 7,
+                   alpha: float = ALPHA_DEFAULT,
+                   max_anoms: float = MAX_ANOMS_DEFAULT,
+                   reference_quirks: bool = False) -> dict[str, np.ndarray]:
+    """The detector's summary of m equal-length series, the rows of
+    the m×n ``ts`` / ``vals`` arrays → output column → m values."""
+    m, n = vals.shape
+    rep_window, avg_tail = (9, 8) if reference_quirks else (7, 7)
+    _season, _trend, remainder = decompose_rows(vals, period=period)
+    flags, scores = iqr_score_rows(remainder, alpha=alpha, max_anoms=max_anoms)
+    last = vals[:, -1]
+    gap_us = (ts[:, -1] - ts[:, -2]).astype("timedelta64[us]").astype(np.int64) \
+        if n >= 2 else np.full(m, np.nan)
+    return {
+        "data_timestamp": ts[:, -1],
+        "value": last,
+        "seven_day_avg": vals[:, -avg_tail:].mean(axis=1),
+        "score": scores[:, -1],
+        "anomaly": np.where(flags[:, -1], "Yes", "No"),
+        "repetitions": (vals[:, max(0, n - 1 - rep_window):n - 1]
+                        == last[:, None]).sum(axis=1),
+        "frequency": gap_us / 1e6 / SECONDS_PER_DAY,
+    }
+
+
+def _series_starts(key_arrays: list[np.ndarray]) -> np.ndarray:
+    """Row offsets where a new series starts in key-sorted rows (nulls
+    compare equal, as in ``groupBy``)."""
+    new = np.zeros(len(key_arrays[0]), dtype=bool)
+    new[:1] = True
+    for a in key_arrays:
+        na = pd.isna(a)
+        new[1:] |= (a[1:] != a[:-1]) & ~(na[1:] & na[:-1])
+    return np.flatnonzero(new)
+
+
+def map_series(
+    fact: DataFrame,
+    keys: Sequence[str],
+    ts_col: str,
+    value_col: str,
+    fn: Callable[[dict, np.ndarray, np.ndarray], Optional[pd.DataFrame]],
+    schema: str,
+) -> DataFrame:
+    """Run ``fn(head, ts, values)`` over every series (rows sharing
+    ``keys``, in ``ts_col`` order) with one Python call per partition.
+
+    ``fn`` gets the m series of one length in an Arrow batch at once —
+    ``head`` maps each key to its m values, ``ts`` and ``values``
+    (float64) are m×n — and returns a ``schema`` frame or None.  Rows
+    arrive sorted by (keys, time), so only a batch's last series can
+    continue in the next one: it is carried over, and memory stays at
+    one batch plus one series."""
+    keys = list(keys)
+    cols = [*keys, ts_col, value_col]
+
+    def buckets(arrays: list[np.ndarray], starts: np.ndarray):
+        lengths = np.diff(np.append(starts, len(arrays[0])))
+        frames = []
+        for n in np.unique(lengths):
+            first = starts[lengths == n]
+            rows = first[:, None] + np.arange(n)
+            out = fn({k: a[first] for k, a in zip(keys, arrays)},
+                     arrays[-2][rows], arrays[-1][rows])
+            if out is not None:
+                frames.append(out)
+        if frames:
+            yield pd.concat(frames, ignore_index=True)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        carry = None
+        for pdf in batches:
+            arrays = [pdf[c].to_numpy() for c in cols[:-1]]
+            arrays.append(pdf[value_col].to_numpy(dtype=np.float64))
+            if carry is not None:
+                arrays = [np.concatenate(pair) for pair in zip(carry, arrays)]
+            if len(arrays[0]):
+                starts = _series_starts(arrays[:len(keys)])
+                carry = [a[starts[-1]:] for a in arrays]
+                yield from buckets([a[:starts[-1]] for a in arrays], starts[:-1])
+        if carry is not None:
+            yield from buckets(carry, np.zeros(1, dtype=np.int64))
+
+    # project before the map (mapInPandas ships every column through
+    # Arrow) and pin the shuffle width: AQE would coalesce the now-tiny
+    # shuffle to ~1 partition by BYTE size, serializing the Python
+    # compute — an explicit repartition keeps the stage wide
+    slim = fact.select(*cols).repartition(
+        fact.sparkSession.sparkContext.defaultParallelism, *keys
+    ).sortWithinPartitions(*keys, ts_col)
+    return slim.mapInPandas(run, schema=schema)
+
+
 def stl_iqr_detect(
     fact: DataFrame,
     keys: Sequence[str],
@@ -152,9 +254,6 @@ def stl_iqr_detect(
     """
     keys = list(keys)
     min_pts = min_points if min_points is not None else 2
-    rep_window = 9 if reference_quirks else 7
-    avg_tail = 8 if reference_quirks else 7
-
     key_fields = ", ".join(
         f"{k} {fact.schema[k].dataType.simpleString()}" for k in keys
     )
@@ -164,101 +263,10 @@ def stl_iqr_detect(
         "repetitions long, frequency double"
     )
 
-    def detect(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        vals = pdf[value_col].to_numpy(dtype=np.float64)
-        ts = pdf[ts_col]
-        n = len(vals)
-        if n < min_pts:
-            return pd.DataFrame(columns=list(pdf[keys].columns) + [
-                "data_timestamp", "value", "seven_day_avg", "score",
-                "anomaly", "repetitions", "frequency"])
-        season, trend, remainder = decompose(vals, period=period)
-        is_anom, l1, l2 = iqr_anomalize(remainder, alpha=alpha, max_anoms=max_anoms)
-        scores = _score(remainder, l1, l2)
-        last_value = vals[-1]
-        tail = vals[-avg_tail:]
-        prior = vals[max(0, n - 1 - rep_window):n - 1]
-        gap = (
-            (ts.iloc[-1] - ts.iloc[-2]).total_seconds() / SECONDS_PER_DAY
-            if n >= 2 else float("nan")
-        )
-        row = {k: pdf[k].iloc[0] for k in keys}
-        row.update({
-            "data_timestamp": ts.iloc[-1],
-            "value": float(last_value),
-            "seven_day_avg": float(tail.mean()),
-            "score": float(scores[-1]),
-            "anomaly": "Yes" if bool(is_anom[-1]) else "No",
-            "repetitions": int((prior == last_value).sum()),
-            "frequency": gap,
-        })
-        return pd.DataFrame([row])
+    def detect(head: dict, ts: np.ndarray, vals: np.ndarray):
+        if vals.shape[1] < min_pts:
+            return None
+        return pd.DataFrame({**head, **summarize_rows(
+            ts, vals, period, alpha, max_anoms, reference_quirks)})
 
-    # project before the grouped map (applyInPandas ships every column
-    # through Arrow) and pin the shuffle width: AQE would coalesce the
-    # now-tiny shuffle to ~1 partition by BYTE size, serializing the
-    # Python compute — an explicit repartition keeps the stage wide
-    slim = fact.select(*keys, ts_col, value_col).repartition(
-        fact.sparkSession.sparkContext.defaultParallelism, *keys
-    )
-    return slim.groupBy(*keys).applyInPandas(detect, schema=out_schema)
-
-
-def stl_iqr_score(
-    fact: DataFrame,
-    keys: Sequence[str],
-    ts_col: str,
-    value_col: str,
-    period: int = 7,
-    alpha: float = ALPHA_DEFAULT,
-    max_anoms: float = MAX_ANOMS_DEFAULT,
-) -> DataFrame:
-    """Every observation scored (decomposition + band + score per row).
-
-    The per-row analogue of ``stl_iqr_detect`` — what the reference's
-    ``time_decompose %>% anomalize %>% time_recompose`` frame looks like
-    before the tail summary (``func.R:96-102``).
-    """
-    keys = list(keys)
-    key_fields = ", ".join(
-        f"{k} {fact.schema[k].dataType.simpleString()}" for k in keys
-    )
-    out_schema = (
-        f"{key_fields}, data_timestamp timestamp, observed double, "
-        "season double, trend double, remainder double, "
-        "remainder_l1 double, remainder_l2 double, "
-        "recomposed_l1 double, recomposed_l2 double, "
-        "score double, anomaly string"
-    )
-
-    def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts_col)
-        vals = pdf[value_col].to_numpy(dtype=np.float64)
-        if len(vals) < 2:
-            return pd.DataFrame(
-                columns=keys + ["data_timestamp", "observed", "season", "trend",
-                                "remainder", "remainder_l1", "remainder_l2",
-                                "recomposed_l1", "recomposed_l2", "score", "anomaly"])
-        season, trend, remainder = decompose(vals, period=period)
-        is_anom, l1, l2 = iqr_anomalize(remainder, alpha=alpha, max_anoms=max_anoms)
-        scores = _score(remainder, l1, l2)
-        out = pd.DataFrame({k: pdf[k].to_numpy() for k in keys})
-        out["data_timestamp"] = pdf[ts_col].to_numpy()
-        out["observed"] = vals
-        out["season"] = season
-        out["trend"] = trend
-        out["remainder"] = remainder
-        out["remainder_l1"] = l1
-        out["remainder_l2"] = l2
-        # time_recompose (func.R:98): band recomposed around observed
-        out["recomposed_l1"] = season + trend + l1
-        out["recomposed_l2"] = season + trend + l2
-        out["score"] = scores
-        out["anomaly"] = np.where(is_anom, "Yes", "No")
-        return out
-
-    slim = fact.select(*keys, ts_col, value_col).repartition(
-        fact.sparkSession.sparkContext.defaultParallelism, *keys
-    )
-    return slim.groupBy(*keys).applyInPandas(score_group, schema=out_schema)
+    return map_series(fact, keys, ts_col, value_col, detect, out_schema)

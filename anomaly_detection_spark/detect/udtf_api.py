@@ -2,21 +2,24 @@
 argument (Spark 4).
 
 The reference's R engine applies ``detect_anomaly`` serially per ticker
-(func.R:133).  The engine's primary port is the parallel
-``applyInPandas`` path (`detect/stl.py:stl_iqr_detect`); this module
-exposes the SAME semantics as a *SQL-native table function*, so a
-SQL-only user can run the detector without touching the DataFrame API:
+(func.R:133).  The engine's primary port is the partition-batched
+``mapInPandas`` path (`detect/stl.py:stl_iqr_detect`), which decomposes
+all series of one length in a partition with one batched LOESS call;
+this module exposes the SAME semantics as a *SQL-native table
+function*, so a SQL-only user can run the detector without touching
+the DataFrame API:
 
     SELECT * FROM detect_series(
         TABLE(SELECT user_id AS k, ts, value AS v FROM events)
         PARTITION BY k ORDER BY ts)
 
-``PARTITION BY k`` gives each series its own UDTF instance (Spark
-shuffles by k exactly as applyInPandas would); ``ORDER BY ts`` hands
-rows in time order, so the instance keeps only a streaming buffer and
-emits one summary row from ``terminate()``.  Numbers are produced by
-the same numpy decompose/anomalize/score kernels as the DataFrame path
-— the differential test pins the two surfaces row-for-row equal.
+``PARTITION BY k`` gives each series its own UDTF instance; ``ORDER BY
+ts`` hands rows in time order, so the instance keeps only a streaming
+buffer and emits one summary row from ``terminate()``.  Numbers come
+from the same ``summarize_rows`` kernel as the DataFrame path, called
+on a batch of one — and the batched kernel is bit-identical per row
+whatever the batch holds, so the differential test pins the two
+surfaces row-for-row equal.
 """
 
 from __future__ import annotations
@@ -25,8 +28,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.functions import udtf
 
 from anomaly_detection_spark.detect.stl import (
-    ALPHA_DEFAULT, MAX_ANOMS_DEFAULT, SECONDS_PER_DAY,
-    _score, decompose, iqr_anomalize,
+    ALPHA_DEFAULT, MAX_ANOMS_DEFAULT, summarize_rows,
 )
 
 _RETURN_TYPE = (
@@ -45,9 +47,6 @@ def make_detect_udtf(
 ):
     """Build the UDTF class with the detector config baked in
     (UDTF constructors take no user arguments)."""
-    rep_window = 9 if reference_quirks else 7
-    avg_tail = 8 if reference_quirks else 7
-
     class DetectSeries:
         def __init__(self) -> None:
             self._rows: list[tuple] = []
@@ -58,31 +57,17 @@ def make_detect_udtf(
         def terminate(self):
             import numpy as np
 
-            n = len(self._rows)
-            if n < min_points:
+            if len(self._rows) < min_points:
                 return
             # ORDER BY ts already sorts the feed; re-sort defensively so
             # an unordered call is wrong-free, just slower
             rows = sorted(self._rows, key=lambda r: r[1])
-            k = rows[0][0]
-            ts = [r[1] for r in rows]
-            vals = np.array([r[2] for r in rows], dtype=np.float64)
-            season, trend, remainder = decompose(vals, period=period)
-            is_anom, l1, l2 = iqr_anomalize(
-                remainder, alpha=alpha, max_anoms=max_anoms
+            out = summarize_rows(
+                np.array([[r[1] for r in rows]], dtype="datetime64[us]"),
+                np.array([[r[2] for r in rows]], dtype=np.float64),
+                period, alpha, max_anoms, reference_quirks,
             )
-            scores = _score(remainder, l1, l2)
-            last = vals[-1]
-            prior = vals[max(0, n - 1 - rep_window):n - 1]
-            gap = (
-                (ts[-1] - ts[-2]).total_seconds() / SECONDS_PER_DAY
-                if n >= 2 else float("nan")
-            )
-            yield (
-                k, ts[-1], float(last), float(vals[-avg_tail:].mean()),
-                float(scores[-1]), "Yes" if bool(is_anom[-1]) else "No",
-                int((prior == last).sum()), gap,
-            )
+            yield (rows[0][0], *(col[0].item() for col in out.values()))
 
     return udtf(DetectSeries, returnType=_RETURN_TYPE)
 

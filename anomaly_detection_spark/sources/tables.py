@@ -13,9 +13,11 @@ dataset; nothing here depends on single-file layout.
 
 from __future__ import annotations
 
+import json
 import os
 from functools import lru_cache
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -90,6 +92,12 @@ def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR,
     return {n: load_table(spark, n, sf_dir) for n in names}
 
 
+_REPARTITION_NODES = frozenset(
+    f"org.apache.spark.sql.catalyst.plans.logical.{name}"
+    for name in ("Repartition", "RepartitionByExpression")
+)
+
+
 def spread_single_file(df: DataFrame) -> DataFrame:
     """Widen a scan backed by fewer files than cores before CPU-heavy
     map work (Python codec kernels, explode fan-outs, per-row digests).
@@ -114,12 +122,15 @@ def spread_single_file(df: DataFrame) -> DataFrame:
     if 0 < n_files < parallelism:
         # ``inputFiles`` sees through shuffles, so a frame a caller
         # already widened still reports its one backing file — skip if
-        # the lineage already holds a Repartition (a ~5 ms logical-plan
-        # string probe; re-spreading would add a full extra exchange)
+        # the lineage already holds a repartition node (one py4j call for
+        # the logical plan's JSON, matched on exact node classes so a
+        # literal in a filter cannot pass for one; re-spreading would
+        # add a full extra exchange)
         try:
-            if "Repartition" in str(df._jdf.queryExecution().logical()):
-                return df
-        except Exception:
-            pass
+            nodes = json.loads(df._jdf.queryExecution().logical().toJSON())
+        except (Py4JError, ValueError):
+            nodes = []
+        if any(node.get("class") in _REPARTITION_NODES for node in nodes):
+            return df
         return df.repartition(parallelism)
     return df

@@ -47,6 +47,8 @@ def test_registry_is_fully_oracle_paired():
     strictly higher anyway)."""
     unpaired = sorted(set(reg.QUERIES) - set(reg.ORACLES))
     assert not unpaired, f"queries without oracles: {unpaired}"
+    orphans = sorted(set(reg.ORACLES) - set(reg.QUERIES))
+    assert not orphans, f"oracles without queries: {orphans}"
 
 
 @pytest.mark.parametrize("name", ORACLE_NAMES)

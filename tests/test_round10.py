@@ -370,3 +370,21 @@ def test_spread_single_file_is_idempotent_on_widened_lineage(spark, sf_dir):
     assert plan.count("Repartition") == 1, plan
     # and the guard still fires on a raw narrow scan
     assert str(once._jdf.queryExecution().logical()).count("Repartition") == 1
+
+
+def test_spread_single_file_ignores_repartition_literal(spark, sf_dir):
+    """The lineage probe matches plan-node classes, not plan text: a
+    filter on the string 'Repartition' is no repartition node, so the
+    narrow scan under it must still be widened."""
+    from anomaly_detection_spark.sources.tables import (
+        load_table, spread_single_file,
+    )
+
+    docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
+    tricky = docs.where(F.col("text") != F.lit("Repartition"))
+    assert "Repartition" in str(tricky._jdf.queryExecution().logical())
+    spread = spread_single_file(tricky)
+    assert spread is not tricky
+    plan = spread._jdf.queryExecution().logical().toJSON()
+    assert plan.count(
+        '"org.apache.spark.sql.catalyst.plans.logical.Repartition"') == 1, plan

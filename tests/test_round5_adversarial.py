@@ -316,8 +316,9 @@ _EVENT_SMOKE_FINDS = [
 
 
 def _smoke(full, finds):
-    keep = list(dict.fromkeys(finds + full[::6]))
-    return [n for n in keep if n in full or n in finds]
+    stale = sorted(set(finds) - set(full))
+    assert not stale, f"smoke finds missing from the family list: {stale}"
+    return list(dict.fromkeys(finds + full[::6]))
 
 
 def test_adversarial_events_differentials_smoke(spark):
