@@ -40,59 +40,54 @@ def master_rule_flags(
 ) -> DataFrame:
     """The SQL engine's complete final select
     (``anomaly_proj_query.sql:148-228``): flags pipeline + both dim
-    joins + the 26-column projection, ordered worst-anomaly-first.
+    joins + the 26-column projection, ordered worst-anomaly-first —
+    one generated statement, like the reference's.
 
-    A reference user's daily job maps 1:1 onto this call.
+    A reference user's daily job maps 1:1 onto this call.  Rows tied
+    on all three ORDER BY keys come in an unspecified order.
     """
-    from anomaly_detection_spark.detect.rules import rule_flags
+    from anomaly_detection_spark.detect.rules import flags_sql
 
     cfg = cfg or DetectorConfig()
-    flags = rule_flags(
-        ticker_data, ["index_id", "granularity_item_id"],
-        "data_timestamp", "data_value", cfg, emit=emit,
+    text, args = flags_sql(
+        ["index_id", "granularity_item_id"], "data_timestamp", "data_value",
+        cfg, emit,
     )
-    gran = F.broadcast(
-        ticker_gran.select(
-            F.col("id").alias("_gran_id"),
-            F.col("Description").alias("granularity"),
-            F.col("granularity1").alias("granularity_code"),
-        )
-    )
-    info = F.broadcast(
-        ticker_info.select(
-            F.col("id").alias("_info_id"),
-            F.col("index_name").alias("ticker"),
-            F.col("description").alias("ticker_info"),
-            F.col("ticker").alias("ticker_code"),
-            F.col("frequency").alias("data_pull_frequency"),
-            "unit_type",
-        )
-    )
-    out = (
-        flags.join(gran, flags["granularity_item_id"] == F.col("_gran_id"), "inner")
-        .join(info, flags["index_id"] == F.col("_info_id"), "inner")
-    )
+    if cfg.predicate is not None:
+        ticker_data = ticker_data.where(cfg.predicate)
+    spark = ticker_data.sparkSession
     run_date = (
-        F.lit(cfg.eval_ts).cast("timestamp_ntz").cast("date")
-        if cfg.eval_ts else F.current_date()
+        "CAST(CAST(:eval_ts AS TIMESTAMP_NTZ) AS DATE)" if cfg.eval_ts
+        else "current_date()"
     )
-    return out.select(
-        "anomaly", "standard_deviation_flag", "data_repetitions_flag",
-        "days_since_last_update_flag", "value", "previous_value",
-        "previous_seven_period_avg", "absolute_one_period_difference",
-        "average", "standard_deviation",
-        "absolute_standard_deviations_from_avg",
-        "standard_deviations_from_avg", "data_repetitions",
-        "date_recorded", run_date.alias("run_date"),
-        "ticker", "granularity", "ticker_info", "ticker_code",
-        "granularity_code", "data_pull_frequency", "avg_days_bw_data",
-        "days_since_last_update", "unit_type", "index_id",
-        F.col("granularity_item_id").alias("granularity_id"),
-    ).orderBy(
-        F.desc("absolute_standard_deviations_from_avg"),
-        F.desc("date_recorded"),
-        F.asc("granularity_id"),
-    )
+    # REPARTITION: a shuffle boundary under the worst-first sort, so its
+    # range partitioner samples this small materialized shuffle instead
+    # of re-running the window stage beneath it
+    statement = f"""
+WITH flags AS ({text})
+SELECT /*+ BROADCAST(g), BROADCAST(i),
+           REPARTITION({spark.sparkContext.defaultParallelism}) */
+       f.anomaly, f.standard_deviation_flag, f.data_repetitions_flag,
+       f.days_since_last_update_flag, f.value, f.previous_value,
+       f.previous_seven_period_avg, f.absolute_one_period_difference,
+       f.average, f.standard_deviation,
+       f.absolute_standard_deviations_from_avg,
+       f.standard_deviations_from_avg, f.data_repetitions,
+       f.date_recorded, {run_date} AS run_date,
+       i.`index_name` AS ticker, g.`Description` AS granularity,
+       i.`description` AS ticker_info, i.`ticker` AS ticker_code,
+       g.`granularity1` AS granularity_code,
+       i.`frequency` AS data_pull_frequency, f.avg_days_bw_data,
+       f.days_since_last_update, i.`unit_type`, f.index_id,
+       f.granularity_item_id AS granularity_id
+FROM flags f
+JOIN {{gran}} g ON f.granularity_item_id = g.`id`
+JOIN {{info}} i ON f.index_id = i.`id`
+ORDER BY absolute_standard_deviations_from_avg DESC, date_recorded DESC,
+         granularity_id ASC
+"""
+    return spark.sql(statement, args=args, fact=ticker_data,
+                     gran=ticker_gran, info=ticker_info)
 
 
 def master_anomaly_detector(

@@ -12,14 +12,33 @@ Per series key, over the trailing ``data_periods`` observations:
 - **staleness flag** — days since the observation vs the series' mean
   sampling gap × ``update_lim`` (ref ``:99-102,141-144``).
 
-Architecture: one DataFrame chain, 100% JVM (no Python UDFs).
-Every window — including the run-length counter, rewritten from the
-reference's widened (key, segment) partition into a running-max
-distance over the SAME key window — shares the series-key
-partitioning, so Catalyst plans exactly ONE Exchange for the whole
-pipeline (asserted by test_scale_patterns.py), whole-stage-codegen'd
-end to end. Per-key state is bounded (trailing N rows), keys are
-fine-grained (no skew), so the plan scales linearly to 100 TB.
+Architecture: ONE generated Spark SQL statement (:func:`flags_sql`),
+100% JVM (no Python UDFs), shared by both surfaces — ``rule_flags``
+here and ``sql_api.rule_flags_sql`` — and embedded as a CTE by
+``master.master_rule_flags``.  Every window is ordered on
+(keys, ``date_recorded`` ASC), so the plan is one hash Exchange, one
+per-key Sort and two ``Window`` operators (pinned by
+test_scale_patterns.py):
+
+1. over the whole series: ``lag``, the trailing-7 frame and the
+   recency rank ``row_num = count(*) OVER (whole series) −
+   row_number() + 1`` (1 = newest), which cuts the trailing
+   ``data_periods`` rows;
+2. over the cut: the whole-cut statistics, and the run length as the
+   distance to the newest reset at or before each row — the running
+   ``min`` of the resets' ``row_num`` — instead of the reference's
+   widened (key, segment) partition, a second Exchange.
+
+Ties: rows sharing a (key, ts) are numbered in the order the one sort
+leaves them, so which of them fall inside the trailing cut is
+arbitrary, as it was with the reference's ``ROW_NUMBER() ... DESC``.
+Per-key state is bounded (trailing N rows), keys are fine-grained (no
+skew), so the plan scales linearly in key cardinality.
+
+Values never enter the text: ``eval_ts``, ``data_periods`` and the
+three thresholds are named parameters bound through ``args=``, and
+only identifiers are rendered, backtick-quoted.  A malformed
+``eval_ts`` fails the cast with ``CAST_INVALID_INPUT``.
 
 Interval semantics (SURVEY.md §2.5 W6): BigQuery's
 ``EXTRACT(HOUR FROM ts - ts)/24`` floors gaps to whole hours; the
@@ -31,27 +50,210 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql import DataFrame
 
 from anomaly_detection_spark.config import DetectorConfig
-from anomaly_detection_spark.operators.rounding import (
-    exact_mean, exact_stddev_samp, quantized, stable_round,
+
+# rule_flags' output, after the key columns
+FLAG_COLUMNS = (
+    "date_recorded", "last_date", "value", "previous_value",
+    "previous_seven_period_avg", "absolute_one_period_difference",
+    "average", "standard_deviation", "repeated_values", "reset_count",
+    "avg_days_bw_data", "days_since_last_update",
+    "absolute_standard_deviations_from_avg", "reset_reps_sum",
+    "data_repetitions", "standard_deviation_flag", "data_repetitions_flag",
+    "days_since_last_update_flag", "anomaly", "standard_deviations_from_avg",
 )
-from anomaly_detection_spark.operators.temporal import epoch_seconds, ntz_lit
-from anomaly_detection_spark.operators.windows import partition_window, series_window
-
-SECONDS_PER_DAY = 86400.0
 
 
-def _gap_days(secs: Column, bq_compat: bool) -> Column:
+def _q(name: str) -> str:
+    # braces doubled: the text goes through spark.sql's str.format pass
+    quoted = "`" + name.replace("`", "``") + "`"
+    return quoted.replace("{", "{{").replace("}", "}}")
+
+
+def _epoch(expr: str) -> str:
+    # TIMESTAMP_NTZ can't cast straight to DOUBLE; NTZ→LTZ is the
+    # identity under the UTC session (operators/temporal.py)
+    return f"CAST(CAST({expr} AS TIMESTAMP) AS DOUBLE)"
+
+
+def _c_round(expr: str) -> str:
+    # operators/rounding.py:c_round at 4 dp; D suffixes, because bare
+    # decimal literals parse as DECIMAL and would leave double
+    return f"floor(({expr}) * 10000.0D + 0.5D) / 10000.0D"
+
+
+def _quantized(expr: str) -> str:
+    # rounding.py:quantized — the value on the 4-dp grid as an exact long
+    return f"CAST(round({expr} * 10000, 0) AS BIGINT)"
+
+
+def _exact_mean(qsum: str, n: str) -> str:
+    # rounding.py:exact_mean
+    return _c_round(f"{qsum} / ({n} * 10000.0D)")
+
+
+def _exact_stddev(qsum: str, qsum2: str, n: str) -> str:
+    # rounding.py:exact_stddev_samp: exact DECIMAL(38,0) cross products,
+    # NULL below two observations (written `> 1L`, a guard form the
+    # plan divide lint recognises, for `>= 2`)
+    d = "DECIMAL(38,0)"
+    var = (f"CAST(CAST({n} AS {d}) * CAST({qsum2} AS {d})"
+           f" - CAST({qsum} AS {d}) * CAST({qsum} AS {d}) AS DOUBLE)")
+    body = _c_round(f"sqrt({var} / CAST({n} * ({n} - 1) AS DOUBLE)) / 10000.0D")
+    return f"CASE WHEN {n} > 1L THEN {body} END"
+
+
+def _gap_days(secs: str, bq_compat: bool) -> str:
     if bq_compat:
         # BigQuery: interval floored to whole hours, then /24
-        return F.floor(secs / 3600.0) / 24.0
+        return f"floor(({secs}) / 3600.0D) / 24.0D"
     # 6-dp rounding (~0.1s) pins float determinism for the oracle
     # comparisons (FIXTURES.md conventions) without changing semantics
-    return F.round(secs / SECONDS_PER_DAY, 6)
+    return f"round(({secs}) / 86400.0D, 6)"
+
+
+def flags_sql(
+    keys: Sequence[str],
+    ts_col: str,
+    value_col: str,
+    cfg: DetectorConfig,
+    emit: str = "latest",
+    columns: Sequence[str] = FLAG_COLUMNS,
+) -> tuple[str, dict]:
+    """The flags pipeline as one Spark SQL statement over ``{fact}``.
+
+    Returns ``(text, args)`` for
+    ``spark.sql(text, args=args, fact=<DataFrame>)``; the output is the
+    key columns followed by ``columns`` (any subset of
+    :data:`FLAG_COLUMNS`).
+    """
+    if emit == "eval_date" and not cfg.eval_ts:
+        raise ValueError("emit='eval_date' requires cfg.eval_ts")
+    if emit not in ("latest", "eval_date", "all"):
+        raise ValueError(f"unknown emit mode: {emit}")
+    k = ", ".join(_q(c) for c in keys)
+    w = f"PARTITION BY {k} ORDER BY date_recorded"
+    whole = f"({w} ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)"
+    trail7 = f"({w} ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)"
+    args = {
+        "data_periods": cfg.data_periods, "stddev_lim": cfg.stddev_lim,
+        "value_rep_lim": cfg.value_rep_lim, "update_lim": cfg.update_lim,
+    }
+    cutoff = complete = now = ""
+    ref_now = "_max_date"
+    if cfg.eval_ts:
+        args["eval_ts"] = cfg.eval_ts
+        ref_now = "CAST(:eval_ts AS TIMESTAMP_NTZ)"
+        # temporal cutoff (ref :46) — pushed to the parquet scan by Catalyst
+        cutoff = f"WHERE {_q(ts_col)} <= {ref_now}"
+    else:
+        now = f"max(date_recorded) OVER {whole} AS _max_date,"
+    if cfg.require_complete:
+        # ref func.R:55 — window-count rewrite of the max_row_num join (P8/J3)
+        complete = "AND _series_n >= :data_periods"
+    where = {
+        "latest": "WHERE row_num = 1",
+        "eval_date": f"WHERE date_recorded = {ref_now}",
+        "all": "",
+    }[emit]
+    q_diff = _quantized("absolute_one_period_difference")
+    text = f"""
+WITH src AS (
+    SELECT {k}, {_q(ts_col)} AS date_recorded, {_q(value_col)} AS _v
+    FROM {{fact}} {cutoff}
+),
+-- row_data (ref :17-52): lag context, trailing-7 mean, recency rank
+row_data AS (
+    SELECT {k}, date_recorded,
+           lag(date_recorded) OVER ({w}) AS last_date,
+           round(_v, 4) AS value,
+           round(lag(_v) OVER ({w}), 4) AS previous_value,
+           -- ENGINE CONVENTION (stated, like the other reference
+           -- quirks): the trailing-7 mean averages values on the 4-dp
+           -- grid via the exact integer-sum fold (bit-identical across
+           -- engines), while the reference (anomaly_proj_query.sql:41-44)
+           -- averages raw values and rounds the result.  Identical for
+           -- inputs already on the 4-dp grid.
+           {_exact_mean(f"sum({_quantized('_v')}) OVER {trail7}",
+                        f"count(_v) OVER {trail7}")} AS previous_seven_period_avg,
+           count(*) OVER {whole} - row_number() OVER ({w}) + 1 AS row_num,
+           count(*) OVER {whole} AS _series_n
+    FROM src
+),
+-- detrended (ref :53-67): trailing-N cut + diffs
+detrended AS (
+    SELECT *,
+           abs(round(value - previous_value, 4)) AS absolute_one_period_difference,
+           {_epoch('date_recorded')} - {_epoch('last_date')} AS _gap_secs,
+           CASE WHEN absolute_one_period_difference = 0 THEN 1 ELSE 0 END
+               AS repeated_values,
+           CASE WHEN absolute_one_period_difference = 0 THEN 0 ELSE 1 END
+               AS reset_count
+    FROM row_data
+    WHERE row_num <= :data_periods {complete}
+),
+-- stats (ref :68-95) over the cut: exact integer sums of the 4-dp
+-- quantized diffs are order-independent, so average/stddev are
+-- bit-identical on any engine or layout (operators/rounding.py);
+-- run length (ref :111-127) = distance to the newest reset so far
+stats AS (
+    SELECT *,
+           sum({q_diff}) OVER {whole} AS _q_sum,
+           sum({q_diff} * {q_diff}) OVER {whole} AS _q_sum2,
+           count(absolute_one_period_difference) OVER {whole} AS _q_n,
+           avg(_gap_secs) OVER {whole} AS _avg_gap_secs, {now}
+           sum(reset_count) OVER ({w}) AS reset_reps_sum,
+           min(CASE WHEN reset_count = 1 THEN row_num END) OVER ({w})
+               - row_num + 1 AS data_repetitions
+    FROM detrended
+),
+-- stddev_data (ref :96-116): z-score and staleness
+stddev_data AS (
+    SELECT *,
+           {_exact_mean('_q_sum', '_q_n')} AS average,
+           {_exact_stddev('_q_sum', '_q_sum2', '_q_n')} AS standard_deviation,
+           {_gap_days('_avg_gap_secs', cfg.bq_compat_intervals)} AS avg_days_bw_data,
+           {_gap_days(f"{_epoch(ref_now)} - {_epoch('date_recorded')}",
+                      cfg.bq_compat_intervals)} AS days_since_last_update
+    FROM stats
+),
+-- flag_data + final (ref :130-155,166-169)
+flag_data AS (
+    SELECT *,
+           -- NULL stddev (n<2) and 0 stddev both fall to 0, as in the
+           -- reference's CASE (NULL != 0 is NULL → ELSE branch)
+           CASE WHEN standard_deviation != 0.0D
+                THEN round(abs(absolute_one_period_difference - average)
+                           / standard_deviation, 4)
+                ELSE 0.0D END AS absolute_standard_deviations_from_avg
+    FROM stddev_data
+),
+flags AS (
+    SELECT *,
+           CASE WHEN absolute_standard_deviations_from_avg >= :stddev_lim
+                THEN 1 ELSE 0 END AS standard_deviation_flag,
+           CASE WHEN data_repetitions >= :value_rep_lim
+                THEN 1 ELSE 0 END AS data_repetitions_flag,
+           CASE WHEN days_since_last_update > avg_days_bw_data * :update_lim
+                THEN 1 ELSE 0 END AS days_since_last_update_flag
+    FROM flag_data
+),
+final AS (
+    SELECT *,
+           CASE WHEN standard_deviation_flag = 1 OR data_repetitions_flag = 1
+                     OR days_since_last_update_flag = 1
+                THEN 1 ELSE 0 END AS anomaly,
+           CASE WHEN value - previous_value < 0.0D
+                THEN -absolute_standard_deviations_from_avg
+                ELSE absolute_standard_deviations_from_avg
+                END AS standard_deviations_from_avg
+    FROM flags {where}
+)
+SELECT {k}, {", ".join(columns)} FROM final
+"""
+    return text, args
 
 
 def rule_flags(
@@ -80,176 +282,7 @@ def rule_flags(
     the caller's ``enrich`` step).
     """
     cfg = cfg or DetectorConfig()
-    keys = list(keys)
-    w = series_window(keys, ts_col)
-    wp = partition_window(keys)
-    w_desc = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(F.col(ts_col).desc())
-
-    df = fact
+    text, args = flags_sql(keys, ts_col, value_col, cfg, emit)
     if cfg.predicate is not None:
-        df = df.where(cfg.predicate)
-    eval_ts = ntz_lit(cfg.eval_ts) if cfg.eval_ts else None
-    if eval_ts is not None:
-        # temporal cutoff (ref :46) — pushed to the parquet scan by Catalyst
-        df = df.where(F.col(ts_col) <= eval_ts)
-
-    # --- row_data (ref :17-52): lag/lead context + recency rank -------------
-    row_data = df.select(
-        *keys,
-        F.col(ts_col).alias("date_recorded"),
-        F.lag(ts_col).over(w).alias("last_date"),
-        F.round(F.col(value_col), 4).alias("value"),
-        F.round(F.lag(value_col, 1).over(w), 4).alias("previous_value"),
-        # ENGINE CONVENTION (stated, like the other reference quirks):
-        # the trailing-7 mean averages values on the 4-dp grid via the
-        # exact integer-sum fold (bit-identical across engines), while
-        # the reference SQL (anomaly_proj_query.sql:41-44) averages raw
-        # values and rounds the result.  For inputs already on the 4-dp
-        # grid — the fixture and the reference's price feeds — the two
-        # are identical; inputs with >4 decimals are quantized first.
-        exact_mean(
-            F.sum(quantized(F.col(value_col), 4)).over(w.rowsBetween(-7, -1)),
-            F.count(value_col).over(w.rowsBetween(-7, -1)), 4, 4,
-        ).alias("previous_seven_period_avg"),
-        F.row_number().over(w_desc).alias("row_num"),
-        F.count(F.lit(1)).over(wp).alias("_series_n"),
-    )
-
-    # --- detrended (ref :53-67): trailing-N cut + diffs ---------------------
-    detr = row_data.where(F.col("row_num") <= cfg.data_periods)
-    if cfg.require_complete:
-        # ref func.R:55 — window-count rewrite of the max_row_num join (P8/J3)
-        detr = detr.where(F.col("_series_n") >= cfg.data_periods)
-    detr = detr.withColumn(
-        "absolute_one_period_difference",
-        F.abs(F.round(F.col("value") - F.col("previous_value"), 4)),
-    ).withColumn(
-        "_gap_secs",
-        epoch_seconds("date_recorded") - epoch_seconds("last_date"),
-    )
-
-    # --- stats (ref :68-95): whole-partition mean/stddev over the cut -------
-    w2 = series_window(keys, "date_recorded")
-    wp2 = partition_window(keys)
-    # exact integer stats over the 4-dp-quantized diffs: sums are
-    # order-independent, so average/stddev (and their rounding) are
-    # bit-identical on any engine or cluster layout (see rounding.py)
-    q_diff = quantized(F.col("absolute_one_period_difference"), 4)
-    stats = (
-        detr.withColumn("_q_sum", F.sum(q_diff).over(wp2))
-        .withColumn("_q_sum2", F.sum(q_diff * q_diff).over(wp2))
-        .withColumn("_q_n", F.count(q_diff).over(wp2))
-        .withColumn(
-            "average", exact_mean(F.col("_q_sum"), F.col("_q_n"), 4, 4)
-        )
-        .withColumn(
-            "standard_deviation",
-            exact_stddev_samp(
-                F.col("_q_sum"), F.col("_q_sum2"), F.col("_q_n"), 4, 4
-            ),
-        )
-        .withColumn("_avg_gap_secs", F.avg("_gap_secs").over(wp2))
-        .withColumn(
-            "repeated_values",
-            F.when(F.col("absolute_one_period_difference") == 0, 1).otherwise(0),
-        )
-        .withColumn(
-            "reset_count",
-            F.when(F.col("absolute_one_period_difference") == 0, 0).otherwise(1),
-        )
-    )
-
-    # --- stddev_data (ref :96-116): z-score, staleness, segment id ----------
-    ref_now = eval_ts if eval_ts is not None else F.max("date_recorded").over(wp2)
-    stddev_data = (
-        stats.withColumn(
-            "avg_days_bw_data", _gap_days(F.col("_avg_gap_secs"), cfg.bq_compat_intervals)
-        )
-        .withColumn(
-            "days_since_last_update",
-            _gap_days(
-                epoch_seconds(ref_now) - epoch_seconds("date_recorded"),
-                cfg.bq_compat_intervals,
-            ),
-        )
-        .withColumn(
-            "absolute_standard_deviations_from_avg",
-            # NULL stddev (n<2) and 0 stddev both fall to 0, as in the
-            # reference's CASE (NULL != 0 is NULL → ELSE branch)
-            F.when(
-                F.col("standard_deviation") != 0,
-                F.round(
-                    F.abs(F.col("absolute_one_period_difference") - F.col("average"))
-                    / F.col("standard_deviation"),
-                    4,
-                ),
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn("reset_reps_sum", F.sum("reset_count").over(w2))
-    )
-
-    # --- repeated_data (ref :117-129): run length of identical values -------
-    # The reference re-partitions by (key, segment) for the in-segment
-    # running sum — a second Exchange. Equivalent with SAME-KEY windows
-    # only: run length = idx − idx_of_last_reset + 1 (the running max of
-    # reset positions). One shuffle for the whole pipeline (SURVEY §4).
-    idx = F.row_number().over(w2)
-    repeated = stddev_data.withColumn("_idx", idx).withColumn(
-        "data_repetitions",
-        (
-            F.col("_idx")
-            - F.max(F.when(F.col("reset_count") == 1, F.col("_idx"))).over(w2)
-            + 1
-        ).cast("long"),
-    )
-
-    # --- flag_data + final (ref :130-155,166-169) ---------------------------
-    flags = (
-        repeated.withColumn(
-            "standard_deviation_flag",
-            F.when(
-                F.col("absolute_standard_deviations_from_avg") >= cfg.stddev_lim, 1
-            ).otherwise(0),
-        )
-        .withColumn(
-            "data_repetitions_flag",
-            F.when(F.col("data_repetitions") >= cfg.value_rep_lim, 1).otherwise(0),
-        )
-        .withColumn(
-            "days_since_last_update_flag",
-            F.when(
-                F.col("days_since_last_update")
-                > cfg.update_lim * F.col("avg_days_bw_data"),
-                1,
-            ).otherwise(0),
-        )
-    )
-    flags = flags.withColumn(
-        "anomaly",
-        F.when(
-            (F.col("standard_deviation_flag") == 1)
-            | (F.col("data_repetitions_flag") == 1)
-            | (F.col("days_since_last_update_flag") == 1),
-            1,
-        ).otherwise(0),
-    ).withColumn(
-        "standard_deviations_from_avg",
-        F.when(
-            F.col("value") - F.col("previous_value") < 0,
-            -F.col("absolute_standard_deviations_from_avg"),
-        ).otherwise(F.col("absolute_standard_deviations_from_avg")),
-    )
-
-    if emit == "latest":
-        flags = flags.where(F.col("row_num") == 1)
-    elif emit == "eval_date":
-        if eval_ts is None:
-            raise ValueError("emit='eval_date' requires cfg.eval_ts")
-        flags = flags.where(F.col("date_recorded") == eval_ts)
-    elif emit != "all":
-        raise ValueError(f"unknown emit mode: {emit}")
-
-    return flags.drop(
-        "_gap_secs", "_avg_gap_secs", "_series_n", "row_num",
-        "_q_sum", "_q_sum2", "_q_n", "_idx",
-    )
+        fact = fact.where(cfg.predicate)
+    return fact.sparkSession.sql(text, args=args, fact=fact)

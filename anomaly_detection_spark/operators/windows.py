@@ -4,10 +4,15 @@ The reference declares a named window ``standard`` as
 ``PARTITION BY index_id, granularity_item_id ORDER BY data_timestamp``
 (``anomaly_proj_query.sql:48-51``) and reuses it with different frames
 (``:90-94``). Spark has no named-window DSL syntax, so the parity
-mechanism is shared ``WindowSpec`` objects: every windowed stage of a
-pipeline shares the same partitioning key, so Catalyst plans ONE
-Exchange + Sort and fuses same-spec Window operators — the property
-that makes the flags pipeline a single-shuffle plan at 100 TB.
+mechanism for DataFrame code is shared ``WindowSpec`` objects: every
+windowed stage of a pipeline shares the same partitioning key, so
+Catalyst plans ONE Exchange and fuses same-spec Window operators.
+Only windows that also share one ORDER BY share a Sort: a DESC rank
+next to ASC frames costs a second per-key Sort.  The flags engine
+itself (``detect/rules.py``) is one generated SQL statement whose
+windows all order on (keys, ts ASC) — one Exchange, one Sort, two
+Window operators — and takes the recency rank as
+``count(*) − row_number() + 1`` rather than from a DESC window.
 """
 
 from __future__ import annotations

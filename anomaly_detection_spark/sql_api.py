@@ -7,13 +7,13 @@ gives them the same surface on Spark:
 - ``register_views(spark, sf_dir)`` — every fixture table as a temp
   view (through ``load_table``, so ns-timestamp normalization applies).
 - ``rule_flags_sql(...)`` — the COMPLETE flags pipeline
-  (``anomaly_proj_query.sql:17-228``) as one Spark SQL statement,
-  generated from a :class:`DetectorConfig`.  Expression-for-expression
-  equivalent to ``detect/rules.py:rule_flags`` — including the
-  exact-integer statistics and C-style rounding from
-  ``operators/rounding.py`` and the single-shuffle run-length rewrite —
-  so both surfaces return bit-identical rows
-  (``tests/test_sql_api.py`` asserts it; the registered
+  (``anomaly_proj_query.sql:17-228``) as one Spark SQL statement over
+  a ``{fact}`` relation, with ``eval_ts``, ``data_periods`` and the
+  thresholds as named parameters.  It is the very statement
+  ``detect/rules.py:rule_flags`` runs (one builder,
+  ``rules.flags_sql``, for both interval modes), projected to the
+  reference's 17 output columns, so both surfaces return bit-identical
+  rows (``tests/test_sql_api.py`` asserts it; the registered
   ``rule_flags_sql_port`` query shares the DataFrame engine's DuckDB
   oracle).
 """
@@ -25,6 +25,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from anomaly_detection_spark.config import DetectorConfig
+from anomaly_detection_spark.detect.rules import flags_sql
 from anomaly_detection_spark.sources.tables import TABLES, load_table
 
 
@@ -36,164 +37,31 @@ def register_views(
         load_table(spark, name, sf_dir).createOrReplaceTempView(name)
 
 
-def _epoch(expr: str) -> str:
-    # TIMESTAMP_NTZ can't cast straight to DOUBLE; NTZ→LTZ is the
-    # identity under the UTC session (operators/temporal.py)
-    return f"CAST(CAST({expr} AS TIMESTAMP) AS DOUBLE)"
-
-
-def _c_round(expr: str, dp: int) -> str:
-    s = float(10 ** dp)
-    # D suffixes: bare decimal literals parse as DECIMAL in Spark
-    # SQL and would silently promote the arithmetic off double
-    return f"floor(({expr}) * {s}D + 0.5D) / {s}D"
-
-
-def _exact_mean(qsum: str, n: str, scale: int, dp: int) -> str:
-    return _c_round(f"{qsum} / ({n} * {float(10 ** scale)}D)", dp)
-
-
-def _exact_stddev(qsum: str, qsum2: str, n: str, scale: int, dp: int) -> str:
-    d = "DECIMAL(38,0)"
-    var_num = (
-        f"CAST(CAST({n} AS {d}) * CAST({qsum2} AS {d})"
-        f" - CAST({qsum} AS {d}) * CAST({qsum} AS {d}) AS DOUBLE)"
-    )
-    body = _c_round(
-        f"sqrt({var_num} / CAST({n} * ({n} - 1) AS DOUBLE))"
-        f" / {float(10 ** scale)}D",
-        dp,
-    )
-    return f"CASE WHEN {n} >= 2 THEN {body} END"
+# the SQL surface's projection: the keys, then these 16 columns
+SQL_COLUMNS = (
+    "date_recorded", "value", "previous_value", "previous_seven_period_avg",
+    "absolute_one_period_difference", "average", "standard_deviation",
+    "absolute_standard_deviations_from_avg", "standard_deviations_from_avg",
+    "data_repetitions", "avg_days_bw_data", "days_since_last_update",
+    "standard_deviation_flag", "data_repetitions_flag",
+    "days_since_last_update_flag", "anomaly",
+)
 
 
 def rule_flags_sql(
-    table: str = "events",
     keys: Sequence[str] = ("user_id",),
     ts_col: str = "ts",
     value_col: str = "value",
     cfg: Optional[DetectorConfig] = None,
     emit: str = "latest",
-) -> str:
-    """Generate the one-statement Spark SQL flags pipeline."""
-    cfg = cfg or DetectorConfig()
-    if cfg.bq_compat_intervals:
-        raise NotImplementedError("SQL surface exposes native intervals only")
-    k = ", ".join(keys)
-    q_val = f"CAST(round({value_col} * 10000, 0) AS BIGINT)"
-    q_diff = "CAST(round(absolute_one_period_difference * 10000, 0) AS BIGINT)"
-    cutoff = (
-        f"WHERE {ts_col} <= TIMESTAMP_NTZ '{cfg.eval_ts}'" if cfg.eval_ts else ""
-    )
-    ref_now = (
-        f"TIMESTAMP_NTZ '{cfg.eval_ts}'" if cfg.eval_ts
-        else "max(date_recorded) OVER wp"
-    )
-    complete = (
-        f"AND _series_n >= {cfg.data_periods}" if cfg.require_complete else ""
-    )
-    emit_pred = {
-        "latest": "WHERE row_num = 1",
-        "eval_date": f"WHERE date_recorded = TIMESTAMP_NTZ '{cfg.eval_ts}'",
-        "all": "",
-    }[emit]
+) -> tuple[str, dict]:
+    """The one-statement flags pipeline and its named parameters.
 
-    return f"""
-WITH row_data AS (
-    SELECT {k},
-           {ts_col} AS date_recorded,
-           lag({ts_col}) OVER w AS last_date,
-           round({value_col}, 4) AS value,
-           round(lag({value_col}, 1) OVER w, 4) AS previous_value,
-           {_exact_mean(f'sum({q_val}) OVER w71', f'count({value_col}) OVER w71', 4, 4)}
-               AS previous_seven_period_avg,
-           row_number() OVER (PARTITION BY {k} ORDER BY {ts_col} DESC) AS row_num,
-           count(1) OVER (PARTITION BY {k}) AS _series_n
-    FROM {table} {cutoff}
-    WINDOW w AS (PARTITION BY {k} ORDER BY {ts_col}),
-           w71 AS (PARTITION BY {k} ORDER BY {ts_col}
-                   ROWS BETWEEN 7 PRECEDING AND 1 PRECEDING)
-),
-detrended AS (
-    SELECT *,
-           abs(round(value - previous_value, 4))
-               AS absolute_one_period_difference,
-           {_epoch('date_recorded')} - {_epoch('last_date')} AS _gap_secs
-    FROM row_data
-    WHERE row_num <= {cfg.data_periods} {complete}
-),
-stats AS (
-    SELECT *,
-           {_exact_mean(f'sum({q_diff}) OVER wp',
-                        'count(absolute_one_period_difference) OVER wp', 4, 4)}
-               AS average,
-           {_exact_stddev(f'sum({q_diff}) OVER wp',
-                          f'sum({q_diff} * {q_diff}) OVER wp',
-                          'count(absolute_one_period_difference) OVER wp', 4, 4)}
-               AS standard_deviation,
-           avg(_gap_secs) OVER wp AS _avg_gap_secs,
-           CASE WHEN absolute_one_period_difference = 0 THEN 1 ELSE 0 END
-               AS repeated_values,
-           CASE WHEN absolute_one_period_difference = 0 THEN 0 ELSE 1 END
-               AS reset_count
-    FROM detrended
-    WINDOW wp AS (PARTITION BY {k})
-),
-stddev_data AS (
-    SELECT *,
-           round(_avg_gap_secs / 86400.0D, 6) AS avg_days_bw_data,
-           round(({_epoch(ref_now)} - {_epoch('date_recorded')}) / 86400.0D, 6)
-               AS days_since_last_update,
-           CASE WHEN standard_deviation != 0
-                THEN round(abs(absolute_one_period_difference - average)
-                           / standard_deviation, 4)
-                ELSE 0.0D END AS absolute_standard_deviations_from_avg
-    FROM stats
-    WINDOW wp AS (PARTITION BY {k})
-),
-idxed AS (
-    SELECT *,
-           row_number() OVER w2 AS _idx,
-           sum(reset_count) OVER w2 AS reset_reps_sum
-    FROM stddev_data
-    WINDOW w2 AS (PARTITION BY {k} ORDER BY date_recorded)
-),
-repeated AS (
-    -- run length without the reference's widened (key, segment)
-    -- partition: distance to the last reset position over the SAME
-    -- key window (detect/rules.py:191-204) — one shuffle total
-    SELECT *,
-           CAST(_idx - max(CASE WHEN reset_count = 1 THEN _idx END) OVER w2
-                + 1 AS BIGINT) AS data_repetitions
-    FROM idxed
-    WINDOW w2 AS (PARTITION BY {k} ORDER BY date_recorded)
-),
-flags AS (
-    SELECT *,
-           CASE WHEN absolute_standard_deviations_from_avg >= {cfg.stddev_lim}D
-                THEN 1 ELSE 0 END AS standard_deviation_flag,
-           CASE WHEN data_repetitions >= {cfg.value_rep_lim}
-                THEN 1 ELSE 0 END AS data_repetitions_flag,
-           CASE WHEN days_since_last_update
-                     > {cfg.update_lim}D * avg_days_bw_data
-                THEN 1 ELSE 0 END AS days_since_last_update_flag
-    FROM repeated
-)
-SELECT {k}, date_recorded, value, previous_value,
-       previous_seven_period_avg, absolute_one_period_difference,
-       average, standard_deviation, absolute_standard_deviations_from_avg,
-       CASE WHEN value - previous_value < 0
-            THEN -absolute_standard_deviations_from_avg
-            ELSE absolute_standard_deviations_from_avg
-            END AS standard_deviations_from_avg,
-       data_repetitions, avg_days_bw_data, days_since_last_update,
-       standard_deviation_flag, data_repetitions_flag,
-       days_since_last_update_flag,
-       CASE WHEN standard_deviation_flag = 1 OR data_repetitions_flag = 1
-                 OR days_since_last_update_flag = 1
-            THEN 1 ELSE 0 END AS anomaly
-FROM flags {emit_pred}
-"""
+    Run it as ``spark.sql(text, args=args, fact=<DataFrame>)``, e.g.
+    ``fact=spark.table("events")``.
+    """
+    return flags_sql(keys, ts_col, value_col, cfg or DetectorConfig(), emit,
+                     columns=SQL_COLUMNS)
 
 
 def run_rule_flags_sql(
@@ -202,5 +70,6 @@ def run_rule_flags_sql(
     cfg: Optional[DetectorConfig] = None,
     emit: str = "latest",
 ) -> DataFrame:
-    register_views(spark, sf_dir, tables=("events",))
-    return spark.sql(rule_flags_sql(cfg=cfg, emit=emit))
+    """``rule_flags_sql`` over the fixture's ``events`` table."""
+    text, args = rule_flags_sql(cfg=cfg, emit=emit)
+    return spark.sql(text, args=args, fact=load_table(spark, "events", sf_dir))

@@ -49,6 +49,70 @@ def test_sql_engine_facade_schema_and_order(spark):
     assert rows[0].ticker == f"Index {SPIKE_KEY[0]} Price"
 
 
+def _executions_after(store, last_id: int) -> list[int]:
+    """Ids of the SQL executions newer than ``last_id``, newest first.
+    The store keeps only the most recent executions, in id order."""
+    execs = store.executionsList()
+    ids = []
+    for i in reversed(range(execs.size())):
+        eid = execs.apply(i).executionId()
+        if eid <= last_id:
+            break
+        ids.append(eid)
+    return ids
+
+
+def _hash_exchange_records(spark, execution_id: int) -> list[tuple[int, int]]:
+    """(shuffle records written, records read) of every hash Exchange
+    in one finished SQL execution, from the SQL status store."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    values = store.executionMetrics(execution_id)
+    nodes = store.planGraph(execution_id).allNodes()
+    out = []
+    for node in (nodes.apply(i) for i in range(nodes.size())):
+        if not node.desc().startswith("Exchange hashpartitioning"):
+            continue
+        ms = node.metrics()
+        ids = {ms.apply(j).name(): ms.apply(j).accumulatorId()
+               for j in range(ms.size())}
+
+        def count(name):
+            v = values.get(ids[name])
+            return int(v.get().replace(",", "")) if v.isDefined() else 0
+
+        out.append((count("shuffle records written"), count("records read")))
+    return out
+
+
+def test_sql_engine_window_stage_runs_once(spark):
+    """The worst-first ORDER BY's range partitioner samples its input
+    before its shuffle map runs.  Directly over the Window stage, that
+    ran the windows twice per action; over the shuffle boundary in
+    master_rule_flags, both read a materialized shuffle.  The Window
+    stage is the one reader of the series-key hash exchange, so that
+    exchange must be read exactly once."""
+    from anomaly_detection_spark.detect.master import master_rule_flags
+    out = master_rule_flags(
+        fixture_df(spark), gran_dim_df(spark), info_dim_df(spark),
+        DetectorConfig(eval_ts="2024-02-29 00:00:00"), emit="eval_date",
+    )
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    before = execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+    out.write.format("noop").mode("overwrite").save()
+    # the status store is fed by the listener bus: let it catch up
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    writes = _executions_after(store, before)
+    assert len(writes) == 1, writes
+    records = _hash_exchange_records(spark, writes[0])
+    assert len(records) == 1, records
+    written, read = records[0]
+    assert written > 0 and read == written, (
+        f"hash exchange wrote {written} rows but {read} were read — "
+        "the Window stage ran more than once"
+    )
+
+
 def test_output_schema_matches_reference(spark):
     out = master_anomaly_detector(
         fixture_df(spark), gran_dim_df(spark), info_dim_df(spark),

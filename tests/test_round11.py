@@ -14,6 +14,8 @@ from __future__ import annotations
 
 from anomaly_detection_spark import queries as reg
 
+from tests.plan_nodes import df_nodes, named, partitioning, physical_nodes
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -33,11 +35,21 @@ def test_sparse_cosine_gram_exchange_is_aqe_ownable(spark):
 
 
 def test_ndcg_candidate_leg_is_spread(spark):
-    plan = (
-        reg.QUERIES["ndcg_dup_retrieval"](spark, SF_DIR)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "RoundRobinPartitioning" in plan, (
+    """The round-robin spread sits on the candidate leg itself: between
+    the union scan and the BroadcastNestedLoopJoin that scores it."""
+    df = reg.QUERIES["ndcg_dup_retrieval"](spark, SF_DIR)
+    joins = named(df_nodes(df), "BroadcastNestedLoopJoin")
+    assert len(joins) == 1, [j.nodeName() for j in joins]
+    kids = joins[0].children()
+    legs = [kids.apply(i) for i in range(kids.size())
+            if kids.apply(i).nodeName() != "BroadcastExchange"]
+    assert len(legs) == 1, "expected one streamed (candidate) leg"
+    spreads = [
+        ex for ex in named(physical_nodes(legs[0]), "Exchange")
+        if partitioning(ex) == "RoundRobinPartitioning"
+        and named(physical_nodes(ex), "Union")
+    ]
+    assert spreads, (
         "candidate-leg spread disappeared — the tokenize + 5x jaccard "
         "map work would serialize on the input's scan partitions"
     )

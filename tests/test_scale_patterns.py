@@ -14,6 +14,8 @@ from pyspark.sql import functions as F
 from anomaly_detection_spark.operators.skew import salted_agg, write_bucketed
 from anomaly_detection_spark.sources.tables import load_table
 
+from tests.plan_nodes import df_nodes, named
+
 
 def _physical_plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
@@ -75,7 +77,7 @@ def test_bucketed_join_skips_exchange(spark, sf_dir, warehouse):
 
 def test_flags_pipeline_single_exchange(spark, sf_dir):
     """The whole flags pipeline must plan exactly ONE hash exchange:
-    every window (including the run-length, rewritten as a running-max
+    every window (including the run-length, rewritten as a running-min
     distance) shares the series-key partitioning. Any more is a perf
     regression."""
     from anomaly_detection_spark.config import DetectorConfig
@@ -88,6 +90,11 @@ def test_flags_pipeline_single_exchange(spark, sf_dir):
     plan = _physical_plan(out)
     n_hash_exchanges = plan.count("Exchange hashpartitioning")
     assert n_hash_exchanges == 1, plan
+    # one generated statement, every window on (keys, ts ASC): one
+    # per-key Sort feeds every Window (the DataFrame chain planned 3 + 8)
+    nodes = df_nodes(out)
+    assert len(named(nodes, "Sort")) == 1, plan
+    assert 1 <= len(named(nodes, "Window")) <= 3, plan
 
 
 def test_csv_json_source_roundtrip(spark, sf_dir):
